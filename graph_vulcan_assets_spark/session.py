@@ -17,6 +17,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MB = 24 * 1024
+
+
+def _default_driver_mem() -> str:
+    """A third of the host's RAM, capped at 24g. A fixed 24g heap let the
+    JVM grow past physical memory on a 16 GB host (the GC expands the heap
+    lazily up to -Xmx) and the kernel killed it mid-suite; the rest of RAM
+    is left to Python workers and the OS."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(_MAX_DRIVER_MB, max(1024, total_mb // 3))}m"
+    except OSError:
+        pass
+    return f"{_MAX_DRIVER_MB}m"
+
 
 def get_spark(
     app_name: str = "graph-vulcan-assets-spark",
@@ -25,14 +43,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default: a third of RAM,
+    at most 24g).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -5,8 +5,8 @@ The reference's whole write side is keyed upserts into an external store
 (inventory/inventory.go: create-or-update per asset/team/edge). Spark's
 parquet sink alone can only append or overwrite, so round 1/2 emulated
 MERGE with a full outer-join + full-snapshot rewrite — O(table) per
-batch. This module generalizes the round-3 streaming state sink's layout
-into a reusable storage primitive:
+batch. This module is that storage primitive; the temporal-graph state
+sink (streaming/ingest.py) keeps its five state tables in it:
 
 - rows live in ``bucket=B`` partitions, B = pmod(xxhash64(key), N) —
   co-partitioned by key, so a MERGE touches only the buckets the batch's
@@ -19,6 +19,9 @@ into a reusable storage primitive:
 - commits are marker-last (``_commits/N``): a crash mid-write leaves
   orphan versions that readers never see and a re-run overwrites;
 - ``read(version=V)`` time-travels to any retained commit;
+  ``snapshot(version=V)`` resolves the same view without checking that
+  it is still retained, for a caller that owns the commit point (the
+  streaming sink commits several tables under one outer marker);
 - superseded versions are pruned per bucket (keep the last
   ``keep_versions`` commits' view).
 
@@ -44,6 +47,41 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+# ---- version listing (driver-side, no SparkSession: pyds plans with it) ----
+
+def marker_ids(d: str) -> list[int]:
+    """Ids of the numbered commit markers in directory ``d``, ascending."""
+    return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+
+
+def commits(path: str) -> list[int]:
+    """Committed version ids of the table at ``path``, ascending."""
+    return marker_ids(os.path.join(path, "_commits"))
+
+
+def bucket_versions(path: str, as_of: int | None = None) -> dict[int, int]:
+    """bucket id → the newest committed version (≤ ``as_of`` if given)
+    that wrote it. Uncommitted (crashed) version dirs are invisible."""
+    committed = set(commits(path))
+    if as_of is not None:
+        committed = {c for c in committed if c <= as_of}
+    out: dict[int, int] = {}
+    if not os.path.isdir(path):
+        return out
+    for d in os.listdir(path):
+        if not d.startswith("batch="):
+            continue
+        v = int(d.split("=", 1)[1])
+        if v not in committed:
+            continue
+        for bd in os.listdir(os.path.join(path, d)):
+            if bd.startswith("bucket="):
+                b = int(bd.split("=", 1)[1])
+                if b not in out or v > out[b]:
+                    out[b] = v
+    return out
 
 
 class BucketTable:
@@ -106,8 +144,7 @@ class BucketTable:
         os.replace(tmp, self._meta_path())
 
     def commits(self) -> list[int]:
-        d = os.path.join(self.path, "_commits")
-        return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+        return commits(self.path)
 
     def _commit_buckets(self) -> dict[int, set[int] | None]:
         """Commit id → the buckets that commit wrote (recorded in the
@@ -156,24 +193,7 @@ class BucketTable:
         return F.pmod(F.xxhash64(*[F.col(c) for c in self.bucket_cols]), F.lit(self.n_buckets)).cast("int")
 
     def _bucket_versions(self, as_of: int | None = None) -> dict[int, int]:
-        committed = set(self.commits())
-        if as_of is not None:
-            committed = {c for c in committed if c <= as_of}
-        out: dict[int, int] = {}
-        if not os.path.isdir(self.path):
-            return out
-        for d in os.listdir(self.path):
-            if not d.startswith("batch="):
-                continue
-            v = int(d.split("=", 1)[1])
-            if v not in committed:
-                continue
-            for bd in os.listdir(os.path.join(self.path, d)):
-                if bd.startswith("bucket="):
-                    b = int(bd.split("=", 1)[1])
-                    if b not in out or v > out[b]:
-                        out[b] = v
-        return out
+        return bucket_versions(self.path, as_of)
 
     # ---- reads ----------------------------------------------------------
     def read(self, version: int | None = None, buckets: set[int] | None = None) -> DataFrame:
@@ -184,6 +204,14 @@ class BucketTable:
         pruned buckets (see ``_check_time_travel``)."""
         if version is not None:
             self._check_time_travel(version, buckets)
+        return self.snapshot(version, buckets)
+
+    def snapshot(self, version: int | None = None, buckets: set[int] | None = None) -> DataFrame:
+        """``read`` without the retained-history check, which opens every
+        commit marker. The caller vouches that ``version`` is still inside
+        the ``keep_versions`` window — the streaming sink reads as of its
+        newest acknowledged batch, at most one commit behind each table's
+        newest, so listing the version dirs is all the resolution costs."""
         versions = self._bucket_versions(as_of=version)
         if buckets is not None:
             versions = {b: v for b, v in versions.items() if b in buckets}
@@ -204,7 +232,14 @@ class BucketTable:
         }
 
     # ---- writes ---------------------------------------------------------
-    def _commit(self, content: DataFrame, version: int, touched: set[int] | None = None) -> None:
+    def commit(self, content: DataFrame, version: int, touched: set[int] | None = None) -> None:
+        """Write ``content`` as the complete new content of every bucket it
+        hashes into (plus each bucket in ``touched``, empty if no row lands
+        there), as version ``version``; other buckets keep their current
+        version. Versions must ascend; re-committing the newest version
+        overwrites it (the idempotent re-run after a crash)."""
+        if self._schema is None:
+            self._schema = content.schema
         base = os.path.join(self.path, f"batch={version}")
         (
             content.withColumn("bucket", self._bucket_col())
@@ -241,14 +276,12 @@ class BucketTable:
         through; every other bucket's files are untouched. Returns the new
         commit id. The batch must be key-unique (dedupe upstream —
         matching Delta MERGE, which errors on multiple source matches)."""
-        if self._schema is None:
-            self._schema = batch.schema
         version = (self.commits()[-1] + 1) if self.commits() else 0
         touched = self._touched(batch)
         if version == 0:
-            self._commit(batch, version, touched)
+            self.commit(batch, version, touched)
             return version
-        self._commit(self.merge_plan(batch, touched=touched), version, touched)
+        self.commit(self.merge_plan(batch, touched=touched), version, touched)
         return version
 
     def merge_plan(self, batch: DataFrame, touched: set[int] | None = None) -> DataFrame:
@@ -277,7 +310,7 @@ class BucketTable:
             self.key_cols,
             "left_anti",
         )
-        self._commit(remaining, version, touched)
+        self.commit(remaining, version, touched)
         return version
 
     # ---- maintenance ----------------------------------------------------
@@ -326,7 +359,7 @@ class BucketTable:
         Time travel before the compaction point is forfeited — the same
         trade a Delta VACUUM makes. Returns the compaction commit id."""
         version = (self.commits()[-1] + 1) if self.commits() else 0
-        self._commit(self.read(), version, touched=set(range(self.n_buckets)))
+        self.commit(self.read(), version, touched=set(range(self.n_buckets)))
         return version
 
 
@@ -448,7 +481,7 @@ def _purge(table: "BucketTable", keys: DataFrame) -> int:
             tmp = os.path.join(table.path, d, f"_purge_tmp_{b}")
             cleaned.write.mode("overwrite").parquet(tmp)
             # drop parquet job-commit droppings so the swapped-in dir
-            # contains only data files (matching _commit's output)
+            # contains only data files (matching commit's output)
             for junk in os.listdir(tmp):
                 if junk.startswith("_") or junk.startswith("."):
                     os.remove(os.path.join(tmp, junk))

@@ -45,6 +45,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from graph_vulcan_assets_spark.sources.bucketstore import bucket_versions, commits
+
 # --- Spark-compatible xxhash64 of a single BIGINT (seed 42) ---------------
 
 _M = (1 << 64) - 1
@@ -83,36 +85,12 @@ def bucket_of_long(value: int, n_buckets: int) -> int:
     return xxhash64_long(value) % n_buckets
 
 
-# --- metadata resolution (no SparkSession: driver-side planning only) -----
+# --- metadata (no SparkSession: driver-side planning only) ---------------
 
 
 def _load_meta(path: str) -> dict:
     with open(os.path.join(path, "_meta.json")) as f:
         return json.load(f)
-
-
-def _commits(path: str) -> list[int]:
-    d = os.path.join(path, "_commits")
-    return sorted(int(f) for f in os.listdir(d) if f.isdigit())
-
-
-def _bucket_versions(path: str, as_of: int | None) -> dict[int, int]:
-    committed = set(_commits(path))
-    if as_of is not None:
-        committed = {c for c in committed if c <= as_of}
-    out: dict[int, int] = {}
-    for d in os.listdir(path):
-        if not d.startswith("batch="):
-            continue
-        v = int(d.split("=", 1)[1])
-        if v not in committed:
-            continue
-        for bd in os.listdir(os.path.join(path, d)):
-            if bd.startswith("bucket="):
-                b = int(bd.split("=", 1)[1])
-                if b not in out or v > out[b]:
-                    out[b] = v
-    return out
 
 
 class _BucketPartition(InputPartition):
@@ -142,7 +120,7 @@ class BucketTableReader(DataSourceReader):
             self.key_value = int(options["key"])
 
     def partitions(self):
-        versions = _bucket_versions(self.path, self.version)
+        versions = bucket_versions(self.path, self.version)
         if self.key_value is not None:
             keep = bucket_of_long(self.key_value, self.n_buckets)
             versions = {b: v for b, v in versions.items() if b == keep}
@@ -226,8 +204,8 @@ def diff_commits(path: str, key_cols: list[str], start: int | None, end: int) ->
     key whose value differs, ``(*key, change_type, *after_values)`` with
     None after-values on delete. Only buckets whose resolved version
     differs are opened."""
-    vs = _bucket_versions(path, start) if start is not None and start >= 0 else {}
-    ve = _bucket_versions(path, end)
+    vs = bucket_versions(path, start) if start is not None and start >= 0 else {}
+    ve = bucket_versions(path, end)
     changed = {b for b in set(vs) | set(ve) if vs.get(b) != ve.get(b)}
     meta = _load_meta(path)
     schema = json.loads(meta["schema"])
@@ -267,8 +245,8 @@ class BucketTableStreamReader(SimpleDataSourceStreamReader):
         return {"commit": -1}
 
     def read(self, start: dict):
-        commits = _commits(self.path)
-        last = commits[-1] if commits else -1
+        done = commits(self.path)
+        last = done[-1] if done else -1
         if last <= start["commit"]:
             return iter([]), start
         rows = diff_commits(self.path, self.key_cols, start["commit"], last)

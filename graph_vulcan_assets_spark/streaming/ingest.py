@@ -15,28 +15,38 @@ Reference behavior re-expressed (SURVEY.md §2.9):
   the persisted state and run through plans.temporal.replay_from_events.
 
 Scale notes: incremental compute AND state I/O are O(micro-batch), not
-O(state). Each state table is hash-bucketed by its natural key
-(``pmod(xxhash64(key), N_BUCKETS)``); a micro-batch
+O(state). Each state table is a ``BucketTable`` (sources/bucketstore.py)
+under ``state_dir/<table>``, hash-bucketed by its natural key
+(``pmod(xxhash64(key), N)``); a micro-batch
 - reads ONLY the buckets its touched keys hash into,
 - seeds ONLY the state rows whose entity keys the batch touches
   (broadcast semi-join on the batch's key set), replays that bounded
   subset, unions the same-bucket remainder back (a pure columnar copy),
-- and rewrites ONLY those buckets, as ``batch=N/bucket=B`` version dirs.
+- and commits ONLY those buckets, as ``batch=N/bucket=B`` version dirs
+  (every table's version for batch N is N).
 Untouched buckets are never read, never rewritten — their files stay
-byte-identical across batches (test-pinned). The live view of a table is,
-per bucket, the newest ACKNOWLEDGED version; the commit marker is written
-last, so a crash mid-write leaves only ignored orphan versions and the
-redelivered batch re-applies against the previous acknowledged view
-(at-least-once → idempotent, matching kafka.go:98-104). Edges are
-bucketed by their CHILD endpoint; buckets holding edges whose PARENT
-endpoint is touched are located through ``PARENT_IDX``, an append-only
-(parent key → child bucket) pointer table bucketed by parent key — so
-the lookup is also O(batch), and nothing in the micro-batch path reads
-state proportional to total state size. On a real deployment the
-versioned buckets become a Delta/Iceberg MERGE — the seed/replay logic is
-unchanged, only the state I/O swaps. All state transforms are
-joins/windows on entity keys; state size is O(live entities), not
-O(event history).
+byte-identical across batches (test-pinned). The tables' own commits are
+not the commit point: ``_applied/N`` is written after all five tables
+committed N, and every read resolves each table as of the newest
+acknowledged batch. A crash mid-write therefore leaves table versions no
+reader sees, and the redelivered batch re-applies against the previous
+acknowledged view, overwriting them (at-least-once → idempotent, matching
+kafka.go:98-104). Each table keeps its two newest versions per bucket,
+so that view is always still on disk. Edges are bucketed by their CHILD
+endpoint; buckets holding edges whose PARENT endpoint is touched are
+located through ``PARENT_IDX``, an append-only (parent key → child
+bucket) pointer table bucketed by parent key — so the lookup is also
+O(batch), and nothing in the micro-batch path reads state proportional
+to total state size. On a real deployment the versioned buckets become a
+Delta/Iceberg MERGE — the seed/replay logic is unchanged, only the state
+I/O swaps. All state transforms are joins/windows on entity keys; state
+size is O(live entities), not O(event history).
+
+State format: state directories written before the tables moved onto
+``BucketTable`` (one root ``_meta.json``, no per-table ``_meta.json`` or
+``_commits``) are not migrated — their tables resolve no committed
+version, so reading them raises ValueError. Start such a deployment from
+a fresh ``state_dir`` and streaming checkpoint.
 
 Kafka wiring (untestable in this environment, no broker): see
 `kafka_reader()` — the standard readStream.format("kafka") with
@@ -46,14 +56,11 @@ decode→seed→replay→write path.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from graph_vulcan_assets_spark.log import get_logger
 from graph_vulcan_assets_spark.plans.temporal import (
@@ -67,6 +74,7 @@ from graph_vulcan_assets_spark.plans.temporal import (
     tag_union_state,
     tuned_for_batch,
 )
+from graph_vulcan_assets_spark.sources.bucketstore import BucketTable, marker_ids
 
 STATE_TABLES = ("assets", "teams", "owns", "parent_of")
 
@@ -89,6 +97,16 @@ BUCKET_KEYS: dict[str, tuple[str, ...]] = {
 # pointer can never go stale) and merged per touched index bucket on write.
 PARENT_IDX = "parent_idx"
 BUCKET_KEYS[PARENT_IDX] = ("parent_type", "parent_identifier")
+
+# Row identity of each table (its BucketTable key); the bucket key above
+# is a prefix of it.
+KEY_COLS: dict[str, tuple[str, ...]] = {
+    "assets": ("type", "identifier"),
+    "teams": ("identifier",),
+    "owns": ("type", "asset_identifier", "team_id"),
+    "parent_of": ("child_type", "child_identifier", "parent_type", "parent_identifier"),
+    PARENT_IDX: ("parent_type", "parent_identifier", "child_bucket"),
+}
 
 _log = get_logger("streaming.ingest")
 
@@ -165,90 +183,42 @@ class TemporalGraphStream:
         self.annotation_key = annotation_key
         self.fault = fault
         os.makedirs(os.path.join(state_dir, "_applied"), exist_ok=True)
-        meta = self._load_meta()
-        if meta is not None:
-            # bucket count is a storage-layout property: once written it
-            # must stay fixed across restarts or rows change buckets
-            self.n_buckets = int(meta["n_buckets"])
-            self._schemas = {
-                t: StructType.fromJson(json.loads(s)) for t, s in meta["schemas"].items()
-            }
-        else:
-            self.n_buckets = n_buckets or int(
-                os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "32")
-            )
-            self._schemas = {}
         # complete any index compaction interrupted by a crash (the swap
         # protocol below is recoverable from every window)
         self._finish_index_compaction()
+        # the bucket count is frozen in each table's metadata at its first
+        # commit; assets commits first, so its count (once written) carries
+        # to tables a crash left without metadata
+        nb = n_buckets or 32
+        self._tables: dict[str, BucketTable] = {}
+        for t in (*STATE_TABLES, PARENT_IDX):
+            self._tables[t] = self._open_table(t, os.path.join(state_dir, t), nb)
+            nb = self._tables[t].n_buckets
+        self.n_buckets = nb
 
     # ---- state I/O ------------------------------------------------------
-    def _meta_path(self) -> str:
-        return os.path.join(self.state_dir, "_meta.json")
-
-    def _load_meta(self) -> dict | None:
-        try:
-            with open(self._meta_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _save_meta(self) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "n_buckets": self.n_buckets,
-                    "schemas": {t: s.json() for t, s in self._schemas.items()},
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path())
+    def _open_table(self, table: str, path: str, n_buckets: int) -> BucketTable:
+        return BucketTable(
+            self.spark,
+            path,
+            key_cols=list(KEY_COLS[table]),
+            n_buckets=n_buckets,
+            bucket_cols=list(BUCKET_KEYS[table]),
+        )
 
     def _applied_batches(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_applied")
-        return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+        return marker_ids(os.path.join(self.state_dir, "_applied"))
 
-    def _bucket_versions(self, table: str) -> dict[int, int]:
-        """bucket id → newest ACKNOWLEDGED batch that wrote it. Orphan
-        versions from crashed (unacknowledged) attempts are invisible."""
-        base = os.path.join(self.state_dir, table)
-        acked = set(self._applied_batches())
-        out: dict[int, int] = {}
-        if not os.path.isdir(base):
-            return out
-        for d in os.listdir(base):
-            if not d.startswith("batch="):
-                continue
-            bid = int(d.split("=", 1)[1])
-            if bid not in acked:
-                continue
-            for bd in os.listdir(os.path.join(base, d)):
-                if bd.startswith("bucket="):
-                    b = int(bd.split("=", 1)[1])
-                    if b not in out or bid > out[b]:
-                        out[b] = bid
-        return out
-
-    def _read_buckets(self, table: str, bucket_ids: set[int] | None) -> DataFrame:
-        """Assemble a state table from its live bucket versions; with
-        ``bucket_ids`` given, read ONLY those buckets (the O(batch) read
-        path — untouched buckets are never opened)."""
-        versions = self._bucket_versions(table)
-        if bucket_ids is not None:
-            versions = {b: v for b, v in versions.items() if b in bucket_ids}
-        paths = [
-            os.path.join(self.state_dir, table, f"batch={v}", f"bucket={b}")
-            for b, v in sorted(versions.items())
-        ]
-        if not paths:
-            return self.spark.createDataFrame([], self._schemas[table])
-        return self.spark.read.schema(self._schemas[table]).parquet(*paths)
+    def _read(self, table: str, buckets: set[int] | None = None) -> DataFrame:
+        """``table`` as of the newest acknowledged batch; with ``buckets``,
+        ONLY those buckets are opened (the O(batch) read path). Versions a
+        crashed attempt committed past that batch are invisible."""
+        return self._tables[table].snapshot(self._applied_batches()[-1], buckets)
 
     def read_state(self) -> dict[str, DataFrame] | None:
         if not self._applied_batches():
             return None
-        return {t: self._read_buckets(t, None) for t in STATE_TABLES}
+        return {t: self._read(t) for t in STATE_TABLES}
 
     def _index_pairs(self, parent_of: DataFrame) -> DataFrame:
         """Distinct (parent key → child bucket) pointers for edge rows."""
@@ -259,119 +229,32 @@ class TemporalGraphStream:
         ).distinct()
 
     def _write_state(self, state: dict[str, DataFrame], batch_id: int) -> None:
-        """Write each table's (touched-bucket) content as a new
-        ``batch=N/bucket=B`` version per present bucket — O(touched
-        buckets), never O(state). The live view resolves per bucket to the
-        newest acknowledged version, so buckets absent from this batch
-        keep serving their prior files untouched."""
+        """Commit each table's (touched-bucket) content as version
+        ``batch_id`` — O(touched buckets), never O(state). Buckets absent
+        from this batch keep serving their prior versions untouched."""
         for t in STATE_TABLES:
-            df = state[t]
-            if t not in self._schemas:
-                self._schemas[t] = df.schema
-            (
-                df.withColumn("bucket", bucket_of(BUCKET_KEYS[t], self.n_buckets))
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.state_dir, t, f"batch={batch_id}"))
-            )
+            self._tables[t].commit(state[t], batch_id)
         # maintain PARENT_IDX: every edge row written this batch must have
         # its (parent → child-bucket) pointer indexed. Pointers from the
         # new edge content are merged (union + distinct) with the prior
         # content of exactly the index buckets those pointers hash into —
         # bounded by the batch's edge content, never all of parent_of.
-        new_pairs = self._index_pairs(state["parent_of"])
-        if PARENT_IDX in self._schemas:
-            idx_buckets = {
-                r[0]
-                for r in new_pairs.select(
-                    bucket_of(BUCKET_KEYS[PARENT_IDX], self.n_buckets)
-                ).distinct().collect()
-            }
+        idx = self._tables[PARENT_IDX]
+        merged = self._index_pairs(state["parent_of"])
+        if self._applied_batches():
             merged = (
-                self._read_buckets(PARENT_IDX, idx_buckets)
-                .unionByName(new_pairs)
+                self._read(PARENT_IDX, idx._touched(merged))
+                .unionByName(merged)
                 .distinct()
             )
-        elif self._applied_batches():
-            # state predates the index (pre-index layout): one-time
-            # backfill from the full live edge set, merged with this
-            # batch's content
-            merged = (
-                self._index_pairs(self._read_buckets("parent_of", None))
-                .unionByName(new_pairs)
-                .distinct()
-            )
-            self._schemas[PARENT_IDX] = new_pairs.schema
-        else:
-            merged = new_pairs
-            self._schemas[PARENT_IDX] = new_pairs.schema
-        (
-            merged.withColumn(
-                "bucket", bucket_of(BUCKET_KEYS[PARENT_IDX], self.n_buckets)
-            )
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(self.state_dir, PARENT_IDX, f"batch={batch_id}"))
-        )
-        self._save_meta()
+        idx.commit(merged, batch_id)
         # marker written last: a crash mid-write leaves the batch
-        # unacknowledged — its bucket versions are orphans the read side
+        # unacknowledged — its table versions are orphans the read side
         # ignores — and it is re-applied on restart against the previous
         # acknowledged view (at-least-once → idempotent, matching
         # kafka.go:98-104's commit-after-process)
         with open(os.path.join(self.state_dir, "_applied", str(batch_id)), "w") as f:
             f.write("ok")
-        self._prune_snapshots()
-
-    def _prune_snapshots(self) -> None:
-        """Remove superseded bucket versions: per bucket, keep the newest
-        TWO acknowledged versions. Why two: a crash between batch N's
-        state write and its marker leaves N unacknowledged, and the
-        redelivered batch must still find every bucket's previous
-        acknowledged version intact to re-apply against. Older versions
-        (and crashed-attempt orphans superseded by a newer acknowledged
-        batch) are dead weight — without pruning, storage grows
-        O(batches × state), the one unbounded resource in the design."""
-        applied = self._applied_batches()
-        if not applied:
-            return
-        acked = set(applied)
-        newest = applied[-1]
-        for t in (*STATE_TABLES, PARENT_IDX):
-            base = os.path.join(self.state_dir, t)
-            if not os.path.isdir(base):
-                continue
-            per_bucket: dict[int, list[int]] = defaultdict(list)
-            for d in os.listdir(base):
-                if not d.startswith("batch="):
-                    continue
-                bid = int(d.split("=", 1)[1])
-                if bid not in acked:
-                    if bid < newest:
-                        # crashed attempt superseded by a newer ack
-                        _log.debug("pruning orphan snapshot %s/%s", t, d)
-                        shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-                    continue
-                for bd in os.listdir(os.path.join(base, d)):
-                    if bd.startswith("bucket="):
-                        per_bucket[int(bd.split("=", 1)[1])].append(bid)
-            for b, bids in per_bucket.items():
-                for bid in sorted(bids)[:-2]:
-                    _log.debug("pruning superseded %s/batch=%d/bucket=%d", t, bid, b)
-                    shutil.rmtree(
-                        os.path.join(base, f"batch={bid}", f"bucket={b}"),
-                        ignore_errors=True,
-                    )
-            # drop acknowledged batch dirs left with no bucket versions
-            for d in os.listdir(base):
-                if not d.startswith("batch="):
-                    continue
-                bid = int(d.split("=", 1)[1])
-                full = os.path.join(base, d)
-                if bid < newest and not any(
-                    x.startswith("bucket=") for x in os.listdir(full)
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
 
     # ---- index compaction (maintenance) ---------------------------------
     def _index_staging_dir(self) -> str:
@@ -415,25 +298,18 @@ class TemporalGraphStream:
         is never partial.
         """
         self._finish_index_compaction()
-        if PARENT_IDX not in self._schemas or not self._applied_batches():
+        if not self._applied_batches():
             return
-        live = self._read_buckets("parent_of", None).where(
+        live = self._read("parent_of").where(
             F.col("expiration") == F.lit(UNEXPIRED).cast("timestamp")
         )
-        rebuilt = self._index_pairs(live)
         staging = self._index_staging_dir()
         shutil.rmtree(staging, ignore_errors=True)
-        # versioned as the newest acknowledged batch: per-bucket resolution
-        # picks it now, and any later batch id supersedes its touched
-        # buckets exactly as with a normal write
-        newest = self._applied_batches()[-1]
-        (
-            rebuilt.withColumn(
-                "bucket", bucket_of(BUCKET_KEYS[PARENT_IDX], self.n_buckets)
-            )
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(staging, f"batch={newest}"))
+        # committed as the newest acknowledged batch: resolution picks it
+        # now, and any later batch id supersedes its touched buckets
+        # exactly as with a normal write
+        self._open_table(PARENT_IDX, staging, self.n_buckets).commit(
+            self._index_pairs(live), self._applied_batches()[-1]
         )
         with open(os.path.join(staging, "_ready"), "w") as f:
             f.write("ok")
@@ -462,11 +338,9 @@ class TemporalGraphStream:
         child-side touches map directly; parent-side touches resolve
         through PARENT_IDX — a touched parent's index bucket is its asset
         bucket (same key, same hash), so the lookup reads O(batch) index
-        buckets, and the pointed-to child buckets join the edge set. With
-        no index (state written by the pre-index layout) the legacy
-        key-only scan of parent_of is the fallback; the next write
-        backfills the index. The collects are bounded by n_buckets —
-        scalar-sized, like the batch-count the tuner already takes.
+        buckets, and the pointed-to child buckets join the edge set. The
+        collects are bounded by n_buckets — scalar-sized, like the
+        batch-count the tuner already takes.
         """
         nb = self.n_buckets
         ab = {
@@ -481,37 +355,20 @@ class TemporalGraphStream:
                 F.pmod(F.xxhash64("team_id"), F.lit(nb)).cast("int")
             ).distinct().collect()
         }
-        eb = set(ab)
         p_keys = F.broadcast(
             touched_assets.select(
                 F.col("asset_type").alias("parent_type"),
                 F.col("identifier").alias("parent_identifier"),
             )
         )
-        if PARENT_IDX in self._schemas:
-            idx = self._read_buckets(PARENT_IDX, ab)
-            eb |= {
-                r[0]
-                for r in idx.join(
-                    p_keys, ["parent_type", "parent_identifier"], "left_semi"
-                )
-                .select("child_bucket")
-                .distinct()
-                .collect()
-            }
-        else:
-            edges = self._read_buckets("parent_of", None).select(
-                "child_type", "child_identifier", "parent_type", "parent_identifier"
-            )
-            eb |= {
-                r[0]
-                for r in edges.join(
-                    p_keys, ["parent_type", "parent_identifier"], "left_semi"
-                )
-                .select(bucket_of(BUCKET_KEYS["parent_of"], nb))
-                .distinct()
-                .collect()
-            }
+        eb = ab | {
+            r[0]
+            for r in self._read(PARENT_IDX, ab)
+            .join(p_keys, ["parent_type", "parent_identifier"], "left_semi")
+            .select("child_bucket")
+            .distinct()
+            .collect()
+        }
         return {"assets": ab, "teams": tb, "owns": ab, "parent_of": eb}
 
     def _apply_batch_inner(self, raw_batch: DataFrame, batch_id: int) -> None:
@@ -540,7 +397,7 @@ class TemporalGraphStream:
             touched_assets = touched_assets.localCheckpoint(eager=True)
             touched_teams = touched_teams.localCheckpoint(eager=True)
             buckets = self._touched_buckets(touched_assets, touched_teams)
-            state = {t: self._read_buckets(t, buckets[t]) for t in STATE_TABLES}
+            state = {t: self._read(t, buckets[t]) for t in STATE_TABLES}
             seeded, untouched = split_state_by_touched(
                 state, touched_assets, touched_teams
             )

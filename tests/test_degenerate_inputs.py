@@ -588,3 +588,22 @@ def test_every_query_survives_hostile_values(spark, sf_dir, tmp_path):
         f"{len(failures)} queries crash on hostile values:\n"
         + "\n".join(f"  {k}: {v}" for k, v in sorted(failures.items()))
     )
+
+
+def test_kmeans_without_seed_vectors_returns_typed_empty(spark):
+    """k-means seeds its centroids from the vectors with ``vec_id < k``; a
+    filtered or id-shifted input with none of them must come back as an
+    empty (vec_id, cid, d, qarr) frame, not a numpy crash on an empty
+    centroid matrix."""
+    from graph_vulcan_assets_spark.llm.kmeans import K, lloyd_assign
+
+    vecs = spark.createDataFrame(
+        [(K + 100, [1, 2, 3]), (K + 101, [4, 5, 6])],
+        "vec_id long, qarr array<bigint>",
+    )
+    out = lloyd_assign(vecs)
+    assert out.columns == ["vec_id", "cid", "d", "qarr"]
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint", "bigint", "bigint", "array<bigint>",
+    ]
+    assert out.collect() == []

@@ -119,16 +119,26 @@ def test_crash_before_marker_reapplies_cleanly(spark, tmp_path):
     redelivered batch must re-apply and converge to the same final state."""
     import os
 
+    from graph_vulcan_assets_spark.streaming.ingest import PARENT_IDX, STATE_TABLES
+
     msgs = fixtures.golden_messages()
     stream = TemporalGraphStream(spark, str(tmp_path / "state"))
     stream.apply_batch(spark.createDataFrame(msgs[:8], schema=RAW_SCHEMA), 0)
+    after_batch0 = read_final_state(spark, stream)
     stream.apply_batch(spark.createDataFrame(msgs[8:], schema=RAW_SCHEMA), 1)
     expected = read_final_state(spark, stream)
+    assert expected != after_batch0  # batch 1 changes state: test is real
 
     # "crash": drop batch 1's marker — as if the process died after the
     # state write but before the commit point
     os.remove(os.path.join(str(tmp_path / "state"), "_applied", "1"))
     assert stream._applied_batches() == [0]
+    # every table still holds its own commit for batch 1, but only the
+    # _applied marker acknowledges a batch: the visible state is batch 0's
+    for t in (*STATE_TABLES, PARENT_IDX):
+        assert 1 in stream._tables[t].commits(), t
+    assert read_final_state(spark, stream) == after_batch0
+    assert read_final_state(spark, TemporalGraphStream(spark, str(tmp_path / "state"))) == after_batch0
     stream.apply_batch(spark.createDataFrame(msgs[8:], schema=RAW_SCHEMA), 1)
     assert read_final_state(spark, stream) == expected
     assert read_final_state(spark, stream) == state_from_interpreter(msgs)
@@ -358,7 +368,7 @@ def test_parent_index_covers_every_edge_bucket(spark, tmp_path):
     assert want, "fixture produced no edges — test is vacuous"
     have = {
         (r["parent_type"], r["parent_identifier"], r["child_bucket"])
-        for r in stream._read_buckets(PARENT_IDX, None).collect()
+        for r in stream._read(PARENT_IDX).collect()
     }
     assert want <= have, f"index missing pointers: {want - have}"
 
@@ -368,7 +378,7 @@ def _index_pointers(stream):
 
     return {
         (r["parent_type"], r["parent_identifier"], r["child_bucket"])
-        for r in stream._read_buckets(PARENT_IDX, None).collect()
+        for r in stream._read(PARENT_IDX).collect()
     }
 
 
