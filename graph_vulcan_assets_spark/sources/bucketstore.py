@@ -43,10 +43,16 @@ import json
 import os
 import shutil
 from collections import defaultdict
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+def bucket_of(cols: Sequence[str], n_buckets: int) -> Column:
+    """Deterministic bucket id of a row: pmod(xxhash64(cols), N)."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
 
 
 # ---- version listing (driver-side, no SparkSession: pyds plans with it) ----
@@ -189,8 +195,8 @@ class BucketTable:
                 f"{self.keep_versions}); full-resync the consumer instead"
             )
 
-    def _bucket_col(self):
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.bucket_cols]), F.lit(self.n_buckets)).cast("int")
+    def _bucket_col(self) -> Column:
+        return bucket_of(self.bucket_cols, self.n_buckets)
 
     def _bucket_versions(self, as_of: int | None = None) -> dict[int, int]:
         return bucket_versions(self.path, as_of)
@@ -255,7 +261,10 @@ class BucketTable:
             # zero-file parquet read under an explicit schema.
             for b in touched:
                 os.makedirs(os.path.join(base, f"bucket={b}"), exist_ok=True)
-        self._save_meta()
+        # the layout and schema are frozen at the first commit; later
+        # commits leave the file alone
+        if not os.path.exists(self._meta_path()):
+            self._save_meta()
         # marker LAST: readers resolve only committed versions, so a crash
         # anywhere above leaves the table at the previous commit. The
         # marker records the buckets this version wrote (read back from

@@ -19,16 +19,20 @@ O(state). Each state table is a ``BucketTable`` (sources/bucketstore.py)
 under ``state_dir/<table>``, hash-bucketed by its natural key
 (``pmod(xxhash64(key), N)``); a micro-batch
 - reads ONLY the buckets its touched keys hash into,
-- seeds ONLY the state rows whose entity keys the batch touches
-  (broadcast semi-join on the batch's key set), replays that bounded
-  subset, unions the same-bucket remainder back (a pure columnar copy),
-- and commits ONLY those buckets, as ``batch=N/bucket=B`` version dirs
-  (every table's version for batch N is N).
-Untouched buckets are never read, never rewritten — their files stay
-byte-identical across batches (test-pinned). The tables' own commits are
-not the commit point: ``_applied/N`` is written after all five tables
-committed N, and every read resolves each table as of the newest
-acknowledged batch. A crash mid-write therefore leaves table versions no
+- seeds EVERY row of those buckets and replays the seeds together with
+  the batch's events: ``seed_events`` round-trips any stored row exactly,
+  so a same-bucket row the batch has no event for comes back unchanged,
+- and commits the replay output as the complete new content of ONLY
+  those buckets, as ``batch=N/bucket=B`` version dirs (every table's
+  version for batch N is N).
+Seeding and replay cost O(touched buckets × rows per bucket) — the same
+bound as the bucket read and rewrite the sink pays anyway; more buckets
+make each touched slice smaller. Untouched buckets are never read, never
+rewritten — their files stay byte-identical across batches
+(test-pinned). The tables' own commits are not the commit point:
+``_applied/N`` is written after all five tables committed N, and every
+read resolves each table as of the newest acknowledged batch, listed
+once per batch. A crash mid-write therefore leaves table versions no
 reader sees, and the redelivered batch re-applies against the previous
 acknowledged view, overwriting them (at-least-once → idempotent, matching
 kafka.go:98-104). Each table keeps its two newest versions per bucket,
@@ -59,7 +63,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_vulcan_assets_spark.log import get_logger
@@ -74,7 +78,7 @@ from graph_vulcan_assets_spark.plans.temporal import (
     tag_union_state,
     tuned_for_batch,
 )
-from graph_vulcan_assets_spark.sources.bucketstore import BucketTable, marker_ids
+from graph_vulcan_assets_spark.sources.bucketstore import BucketTable, bucket_of, marker_ids
 
 STATE_TABLES = ("assets", "teams", "owns", "parent_of")
 
@@ -109,11 +113,6 @@ KEY_COLS: dict[str, tuple[str, ...]] = {
 }
 
 _log = get_logger("streaming.ingest")
-
-
-def bucket_of(cols: tuple[str, ...], n_buckets: int) -> Column:
-    """Deterministic bucket id for a state row: pmod(xxhash64(key), N)."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
 
 
 def kafka_reader(
@@ -209,16 +208,27 @@ class TemporalGraphStream:
     def _applied_batches(self) -> list[int]:
         return marker_ids(os.path.join(self.state_dir, "_applied"))
 
-    def _read(self, table: str, buckets: set[int] | None = None) -> DataFrame:
-        """``table`` as of the newest acknowledged batch; with ``buckets``,
-        ONLY those buckets are opened (the O(batch) read path). Versions a
-        crashed attempt committed past that batch are invisible."""
-        return self._tables[table].snapshot(self._applied_batches()[-1], buckets)
+    def _acked(self) -> int | None:
+        """The newest acknowledged batch id (None before the first)."""
+        applied = self._applied_batches()
+        return applied[-1] if applied else None
+
+    def _read(
+        self, table: str, buckets: set[int] | None = None, as_of: int | None = None
+    ) -> DataFrame:
+        """``table`` as of acknowledged batch ``as_of`` (default: the
+        newest); with ``buckets``, ONLY those buckets are opened (the
+        O(batch) read path). Versions a crashed attempt committed past
+        that batch are invisible."""
+        if as_of is None:
+            as_of = self._acked()
+        return self._tables[table].snapshot(as_of, buckets)
 
     def read_state(self) -> dict[str, DataFrame] | None:
-        if not self._applied_batches():
+        acked = self._acked()
+        if acked is None:
             return None
-        return {t: self._read(t) for t in STATE_TABLES}
+        return {t: self._read(t, as_of=acked) for t in STATE_TABLES}
 
     def _index_pairs(self, parent_of: DataFrame) -> DataFrame:
         """Distinct (parent key → child bucket) pointers for edge rows."""
@@ -228,10 +238,14 @@ class TemporalGraphStream:
             bucket_of(BUCKET_KEYS["parent_of"], self.n_buckets).alias("child_bucket"),
         ).distinct()
 
-    def _write_state(self, state: dict[str, DataFrame], batch_id: int) -> None:
+    def _write_state(
+        self, state: dict[str, DataFrame], batch_id: int, acked: int | None
+    ) -> None:
         """Commit each table's (touched-bucket) content as version
         ``batch_id`` — O(touched buckets), never O(state). Buckets absent
-        from this batch keep serving their prior versions untouched."""
+        from this batch keep serving their prior versions untouched.
+        ``acked`` is the newest acknowledged batch the content was built
+        on (None for the first batch)."""
         for t in STATE_TABLES:
             self._tables[t].commit(state[t], batch_id)
         # maintain PARENT_IDX: every edge row written this batch must have
@@ -241,9 +255,9 @@ class TemporalGraphStream:
         # bounded by the batch's edge content, never all of parent_of.
         idx = self._tables[PARENT_IDX]
         merged = self._index_pairs(state["parent_of"])
-        if self._applied_batches():
+        if acked is not None:
             merged = (
-                self._read(PARENT_IDX, idx._touched(merged))
+                self._read(PARENT_IDX, idx._touched(merged), acked)
                 .unionByName(merged)
                 .distinct()
             )
@@ -298,9 +312,10 @@ class TemporalGraphStream:
         is never partial.
         """
         self._finish_index_compaction()
-        if not self._applied_batches():
+        acked = self._acked()
+        if acked is None:
             return
-        live = self._read("parent_of").where(
+        live = self._read("parent_of", as_of=acked).where(
             F.col("expiration") == F.lit(UNEXPIRED).cast("timestamp")
         )
         staging = self._index_staging_dir()
@@ -309,7 +324,7 @@ class TemporalGraphStream:
         # now, and any later batch id supersedes its touched buckets
         # exactly as with a normal write
         self._open_table(PARENT_IDX, staging, self.n_buckets).commit(
-            self._index_pairs(live), self._applied_batches()[-1]
+            self._index_pairs(live), acked
         )
         with open(os.path.join(staging, "_ready"), "w") as f:
             f.write("ok")
@@ -318,19 +333,24 @@ class TemporalGraphStream:
 
     # ---- incremental application ---------------------------------------
     def apply_batch(self, raw_batch: DataFrame, batch_id: int) -> None:
-        if batch_id in self._applied_batches():
+        if os.path.exists(os.path.join(self.state_dir, "_applied", str(batch_id))):
             # replayed micro-batch after recovery: idempotent skip
             _log.info("batch %d already applied, skipping (idempotent replay)", batch_id)
             return
+        # the one _applied listing of the batch: every read below resolves
+        # the state as of this acknowledged batch
+        acked = self._acked()
 
         # scale initial shuffle partitions to the micro-batch size and drop
         # AQE for small batches: the replay is many small shuffles, and
         # per-partition + per-stage fixed cost dominates tiny batches (see
         # temporal.tuned_for_batch)
         with tuned_for_batch(self.spark, raw_batch.count()):
-            self._apply_batch_inner(raw_batch, batch_id)
+            self._apply_batch_inner(raw_batch, batch_id, acked)
 
-    def _touched_buckets(self, touched_assets: DataFrame, touched_teams: DataFrame) -> dict[str, set[int]]:
+    def _touched_buckets(
+        self, touched_assets: DataFrame, touched_teams: DataFrame, acked: int
+    ) -> dict[str, set[int]]:
         """Bucket ids each state table must read+rewrite for this batch.
 
         assets/owns share the asset-key bucket function; teams use the
@@ -342,19 +362,12 @@ class TemporalGraphStream:
         collects are bounded by n_buckets — scalar-sized, like the
         batch-count the tuner already takes.
         """
-        nb = self.n_buckets
-        ab = {
-            r[0]
-            for r in touched_assets.select(
-                F.pmod(F.xxhash64("asset_type", "identifier"), F.lit(nb)).cast("int")
-            ).distinct().collect()
-        }
-        tb = {
-            r[0]
-            for r in touched_teams.select(
-                F.pmod(F.xxhash64("team_id"), F.lit(nb)).cast("int")
-            ).distinct().collect()
-        }
+        ab = self._tables["assets"]._touched(
+            touched_assets.withColumnRenamed("asset_type", "type")
+        )
+        tb = self._tables["teams"]._touched(
+            touched_teams.withColumnRenamed("team_id", "identifier")
+        )
         p_keys = F.broadcast(
             touched_assets.select(
                 F.col("asset_type").alias("parent_type"),
@@ -363,7 +376,7 @@ class TemporalGraphStream:
         )
         eb = ab | {
             r[0]
-            for r in self._read(PARENT_IDX, ab)
+            for r in self._read(PARENT_IDX, ab, acked)
             .join(p_keys, ["parent_type", "parent_identifier"], "left_semi")
             .select("child_bucket")
             .distinct()
@@ -371,7 +384,9 @@ class TemporalGraphStream:
         }
         return {"assets": ab, "teams": tb, "owns": ab, "parent_of": eb}
 
-    def _apply_batch_inner(self, raw_batch: DataFrame, batch_id: int) -> None:
+    def _apply_batch_inner(
+        self, raw_batch: DataFrame, batch_id: int, acked: int | None
+    ) -> None:
         if self.annotation_key is not None:
             decoded = decode_events(raw_batch, self.annotation_key)
         else:
@@ -384,30 +399,22 @@ class TemporalGraphStream:
             int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         )
         ev = events_from_decoded(decoded)
-        if not self._applied_batches():
-            new_state = replay_from_events(ev)
-        else:
+        if acked is not None:
             # O(batch) incremental step: read ONLY the buckets this
-            # micro-batch's keys hash into, seed ONLY the state rows whose
-            # entity keys the batch touches; same-bucket bystander rows
-            # pass through into the rewritten bucket version (a straight
-            # columnar copy), and every other bucket is neither read nor
+            # micro-batch's keys hash into and seed ALL of their rows. A
+            # row the batch has no event for replays from its seeds back
+            # to itself, so the replay output is the complete new content
+            # of those buckets; every other bucket is neither read nor
             # written.
             touched_assets, touched_teams = touched_keys(ev)
             touched_assets = touched_assets.localCheckpoint(eager=True)
             touched_teams = touched_teams.localCheckpoint(eager=True)
-            buckets = self._touched_buckets(touched_assets, touched_teams)
-            state = {t: self._read(t, buckets[t]) for t in STATE_TABLES}
-            seeded, untouched = split_state_by_touched(
-                state, touched_assets, touched_teams
+            buckets = self._touched_buckets(touched_assets, touched_teams, acked)
+            seeds = seed_events(
+                {t: self._read(t, buckets[t], acked) for t in STATE_TABLES}
             )
-            seeds = seed_events(seeded)
             ev = {k: seeds[k].unionByName(ev[k]) for k in ev}
-            replayed = replay_from_events(ev)
-            new_state = {
-                t: untouched[t].select(replayed[t].columns).unionByName(replayed[t])
-                for t in STATE_TABLES
-            }
+        new_state = replay_from_events(ev)
         # fused eager local checkpoint: the four state tables materialize
         # as ONE tagged-union job (shared replay frames computed once, one
         # scheduling pass instead of four) and the lineage is cut so plans
@@ -417,7 +424,7 @@ class TemporalGraphStream:
         new_state = split_tagged_state(tagged)
         if self.fault is not None:
             self.fault(batch_id)  # crash injection point (pre-commit)
-        self._write_state(new_state, batch_id)
+        self._write_state(new_state, batch_id, acked)
         _log.info("batch %d applied and committed", batch_id)
 
     # ---- stream wiring --------------------------------------------------
@@ -490,57 +497,6 @@ def touched_keys(ev: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
         .distinct()
     )
     return assets, teams
-
-
-def split_state_by_touched(
-    state: dict[str, DataFrame],
-    touched_assets: DataFrame,
-    touched_teams: DataFrame,
-) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-    """Partition every state table into (touched → seed+replay, untouched
-    → pass through). The touched key set is one micro-batch's worth of
-    keys, so it is broadcast: the split costs one broadcast-hash probe per
-    state row, never a shuffle of the state."""
-    ta = F.broadcast(touched_assets)
-    tt = F.broadcast(touched_teams)
-
-    def split(df: DataFrame, keys: DataFrame, on: list[str]) -> tuple[DataFrame, DataFrame]:
-        return df.join(keys, on, "left_semi"), df.join(keys, on, "left_anti")
-
-    a_keys = ta.select(F.col("asset_type").alias("type"), "identifier")
-    assets_t, assets_u = split(state["assets"], a_keys, ["type", "identifier"])
-
-    t_keys = tt.select(F.col("team_id").alias("identifier"))
-    teams_t, teams_u = split(state["teams"], t_keys, ["identifier"])
-
-    o_keys = ta.select(
-        F.col("asset_type").alias("type"),
-        F.col("identifier").alias("asset_identifier"),
-    )
-    owns_t, owns_u = split(state["owns"], o_keys, ["type", "asset_identifier"])
-
-    # edge is touched when EITHER endpoint is a touched asset; the OR is
-    # two consecutive broadcast semi/anti splits, never an OR-join
-    c_keys = ta.select(
-        F.col("asset_type").alias("child_type"),
-        F.col("identifier").alias("child_identifier"),
-    )
-    p_keys = ta.select(
-        F.col("asset_type").alias("parent_type"),
-        F.col("identifier").alias("parent_identifier"),
-    )
-    child_hit, child_miss = split(
-        state["parent_of"], c_keys, ["child_type", "child_identifier"]
-    )
-    parent_hit, edges_u = split(
-        child_miss, p_keys, ["parent_type", "parent_identifier"]
-    )
-    edges_t = child_hit.unionByName(parent_hit)
-
-    return (
-        {"assets": assets_t, "teams": teams_t, "owns": owns_t, "parent_of": edges_t},
-        {"assets": assets_u, "teams": teams_u, "owns": owns_u, "parent_of": edges_u},
-    )
 
 
 def seed_events(state: dict[str, DataFrame]) -> dict[str, DataFrame]:

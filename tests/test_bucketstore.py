@@ -104,6 +104,21 @@ def test_reopen_preserves_layout(spark, tmp_path):
     assert len(_rows(t2.read())) == 50
 
 
+def test_meta_written_once(spark, table):
+    """The layout and schema are frozen at the first commit, so later
+    commits leave ``_meta.json`` alone (an atomic rewrite would replace
+    the file's inode)."""
+    table.upsert(spark.createDataFrame([(i, f"v{i}") for i in range(10)], ["k", "v"]))
+    meta = os.path.join(table.path, "_meta.json")
+    before = os.stat(meta)
+    table.upsert(spark.createDataFrame([(1, "V1")], ["k", "v"]))
+    table.delete(spark.createDataFrame([(2,)], ["k"]))
+    after = os.stat(meta)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    reopened = BucketTable(spark, table.path, key_cols=["k"])
+    assert reopened.n_buckets == 8 and reopened._schema == table._schema
+
+
 def test_composite_key(spark, tmp_path):
     t = BucketTable(spark, str(tmp_path / "t"), key_cols=["a", "b"], n_buckets=4)
     t.upsert(spark.createDataFrame([(1, "x", 10), (1, "y", 20)], ["a", "b", "v"]))

@@ -62,12 +62,27 @@ def read_final_state(spark, stream: TemporalGraphStream):
     return assets, teams, owns, edges
 
 
-@pytest.mark.parametrize("msgs_fn", [fixtures.golden_messages, lambda: fixtures.random_messages(11, n=60)])
-def test_stream_matches_batch_replay(spark, tmp_path, msgs_fn):
+def _random_messages():
+    return fixtures.random_messages(11, n=60)
+
+
+# n_buckets=None is the default layout; with ONE bucket every batch reads,
+# seeds and replays the whole stored state, so every row must round-trip
+# through seed_events and the replay unchanged
+@pytest.mark.parametrize(
+    "msgs_fn,n_buckets",
+    [
+        pytest.param(fixtures.golden_messages, None, id="golden_messages"),
+        pytest.param(_random_messages, None, id="<lambda>"),
+        pytest.param(fixtures.golden_messages, 1, id="golden_messages-1bucket"),
+        pytest.param(_random_messages, 1, id="random_messages-1bucket"),
+    ],
+)
+def test_stream_matches_batch_replay(spark, tmp_path, msgs_fn, n_buckets):
     msgs = msgs_fn()
     input_dir = str(tmp_path / "input")
     write_chunks(msgs, input_dir)
-    stream = TemporalGraphStream(spark, str(tmp_path / "state"))
+    stream = TemporalGraphStream(spark, str(tmp_path / "state"), n_buckets=n_buckets)
     q = stream.run_file_stream(input_dir, str(tmp_path / "ckpt"))
     assert q.awaitTermination(420), "stream did not terminate in time"
 
@@ -170,58 +185,95 @@ def test_retry_runner_recovers_from_injected_crash(spark, tmp_path):
     assert read_final_state(spark, stream) == state_from_interpreter(msgs)
 
 
-def test_seeding_scoped_to_touched_keys(spark, tmp_path):
-    """O(batch) contract: a micro-batch seeds (and re-replays) only the
-    state rows whose entity keys it touches; every other row must land in
-    the untouched pass-through partition."""
+def test_seeding_scoped_to_touched_buckets(spark, tmp_path, monkeypatch):
+    """O(touched buckets) contract: a one-entity micro-batch reads, seeds
+    and commits only the buckets its keys hash into (for edges, plus the
+    child buckets of edges whose parent it touches), resolves the
+    acknowledged state with ONE ``_applied`` listing, and — replaying
+    every row of those buckets — still converges to the interpreter."""
+    import datetime
+
     from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA as RS
-    from graph_vulcan_assets_spark.streaming.ingest import (
-        split_state_by_touched,
-        touched_keys,
-    )
     from graph_vulcan_assets_spark.plans.temporal import (
         decode_events,
         events_from_decoded,
     )
+    from graph_vulcan_assets_spark.streaming import ingest
+    from graph_vulcan_assets_spark.streaming.ingest import (
+        BUCKET_KEYS,
+        STATE_TABLES,
+        bucket_of,
+        touched_keys,
+    )
 
     msgs = fixtures.golden_messages()
-    stream = TemporalGraphStream(spark, str(tmp_path / "state"))
+    state_dir = str(tmp_path / "state")
+    stream = TemporalGraphStream(spark, state_dir)
     stream.apply_batch(spark.createDataFrame(msgs, schema=RS), 0)
-    state = stream.read_state()
-    all_assets = {(r["type"], r["identifier"]) for r in state["assets"].collect()}
-    assert len(all_assets) > 1  # the split below must be non-trivial
 
     # a second batch touching exactly one existing asset (+ its team):
     # a fresh refresh of an already-known entity, with a seq above every
     # prior event (ordered delivery, kafka.go:69-105)
-    import datetime
-
     one = dict([m for m in msgs if m["value"] is not None][0])
     one["seq"] = max(m["seq"] for m in msgs) + 1
     one["ts"] = max(m["ts"] for m in msgs) + datetime.timedelta(minutes=5)
     batch2 = spark.createDataFrame([one], schema=RS)
-    ev = events_from_decoded(decode_events(batch2))
-    ta, tt = touched_keys(ev)
-    seeded, untouched = split_state_by_touched(state, ta, tt)
 
-    touched_set = {(r["asset_type"], r["identifier"]) for r in ta.collect()}
-    seeded_assets = {(r["type"], r["identifier"]) for r in seeded["assets"].collect()}
-    untouched_assets = {(r["type"], r["identifier"]) for r in untouched["assets"].collect()}
-    assert seeded_assets <= touched_set
-    assert seeded_assets | untouched_assets == all_assets
-    assert seeded_assets.isdisjoint(untouched_assets)
-    assert untouched_assets  # most of the graph passes through untouched
+    # the buckets the batch may touch, derived from its keys and the
+    # stored edges (not from the index the sink consults)
+    ta, tt = touched_keys(events_from_decoded(decode_events(batch2)))
+    nb = stream.n_buckets
 
-    # owns scoped to touched assets; edges scoped to touched endpoints
-    for r in seeded["owns"].collect():
-        assert (r["type"], r["asset_identifier"]) in touched_set
-    for r in seeded["parent_of"].collect():
-        assert (
-            (r["child_type"], r["child_identifier"]) in touched_set
-            or (r["parent_type"], r["parent_identifier"]) in touched_set
-        )
-    # applying the batch through the scoped path still converges exactly
+    def ids(df, cols):
+        return {r[0] for r in df.select(bucket_of(cols, nb)).distinct().collect()}
+
+    asset_b = ids(ta, ("asset_type", "identifier"))
+    parent_keys = ta.select(
+        ta["asset_type"].alias("parent_type"),
+        ta["identifier"].alias("parent_identifier"),
+    )
+    parent_edges = stream.read_state()["parent_of"].join(
+        parent_keys, ["parent_type", "parent_identifier"], "left_semi"
+    )
+    expected = {
+        "assets": asset_b,
+        "owns": asset_b,
+        "teams": ids(tt, ("team_id",)),
+        "parent_of": asset_b | ids(parent_edges, BUCKET_KEYS["parent_of"]),
+    }
+    def bucket_dirs(t, batch_id):
+        d = os.path.join(state_dir, t, f"batch={batch_id}")
+        return {x for x in os.listdir(d) if x.startswith("bucket=")}
+
+    # the batch leaves some buckets alone: the scoping is non-trivial
+    assert sum(map(len, expected.values())) < sum(
+        len(bucket_dirs(t, 0)) for t in STATE_TABLES
+    )
+
+    reads: dict[str, list] = {}
+    read = stream._read
+
+    def spy_read(table, buckets=None, as_of=None):
+        reads.setdefault(table, []).append(buckets)
+        return read(table, buckets, as_of)
+
+    listings = []
+    marker_ids = ingest.marker_ids
+
+    def spy_marker_ids(d):
+        listings.append(d)
+        return marker_ids(d)
+
+    monkeypatch.setattr(stream, "_read", spy_read)
+    monkeypatch.setattr(ingest, "marker_ids", spy_marker_ids)
     stream.apply_batch(batch2, 1)
+    monkeypatch.undo()
+
+    assert len(listings) == 1, listings
+    for t in STATE_TABLES:
+        assert reads[t] == [expected[t]], t
+        assert bucket_dirs(t, 1) <= {f"bucket={b}" for b in expected[t]}, t
+    # applying the batch through the bucket-scoped path converges exactly
     assert read_final_state(spark, stream) == state_from_interpreter(msgs + [one])
 
 
